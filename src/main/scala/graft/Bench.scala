@@ -175,7 +175,9 @@ object Bench {
     // EXTERNAL burst instead stands out against the run's own median
     // (the r20 contamination: a q_f* block at 5.5–6.9 vs ~2
     // elsewhere) — retry only above max(maxLoad, 2×median).
-    val chosenLoads = firstPass.map(_._2._3).sorted
+    // loadavg is -1 where the OS does not report it; such samples carry
+    // no load and must not drag the median (hence the gate) down
+    val chosenLoads = firstPass.map(_._2._3).filter(_ >= 0).sorted
     val medianLoad =
       if (chosenLoads.isEmpty) 0.0 else chosenLoads(chosenLoads.size / 2)
     val retryGate = math.max(maxLoad, 2.0 * medianLoad)

@@ -25,6 +25,12 @@ import graft.sources.DmsFiles
   * Env (reference ENVIRONMENT_VARIABLES.md analogs): RNG_SEED (default
   * 42), RECORD_REDUCTION_ENABLED (gates keep_num_of_records),
   * SKIP_VALIDATIONS, NUM_OF_BUFFERS (default parallelism).
+  *
+  * Validation phase: when `<config-dir>/../validations/<db>-<schema>.toml`
+  * exists and SKIP_VALIDATIONS is not `true`, the output tables named in
+  * some probe's SQL (and only those) are registered as temp views, then
+  * the probes run. Both steps use the same `--parallelism` pool as the
+  * tables.
   */
 object Main {
 
@@ -194,13 +200,30 @@ object Main {
     // post-run validations, reference step 7 (src/main.rs:256-270)
     val validationsPath = java.nio.file.Paths.get(
       a.configDir, "..", "validations", s"${a.dbName}-${a.schemaName}.toml").normalize()
-    if (java.nio.file.Files.exists(validationsPath)) {
-      tables.foreach { t =>
+    if (sys.env.get("SKIP_VALIDATIONS").contains("true"))
+      println("[graft] validations skipped (SKIP_VALIDATIONS=true)")
+    else if (java.nio.file.Files.exists(validationsPath)) {
+      val validations =
+        ConfigLoader.parseValidations(java.nio.file.Files.readString(validationsPath))
+      TablePipeline.mapConcurrently(
+          namedTables(tables, validations.validations.map(_.query)), a.parallelism) { t =>
         spark.read.parquet(s"${a.outputDir}/$t.parquet").createOrReplaceTempView(t)
       }
-      Validator.runOrThrow(spark,
-        ConfigLoader.parseValidations(java.nio.file.Files.readString(validationsPath)))
+      Validator.runOrThrow(spark, validations, skip = false, parallelism = a.parallelism)
       println("[graft] validations passed")
     }
   }
+
+  /** The tables some query names: a case-insensitive identifier-token
+    * match (no `[A-Za-z0-9_]` on either side), so backticks, CTE bodies
+    * and subqueries all count. Text matching can only over-select (a name
+    * inside a string literal or comment), never miss a table the analyzer
+    * would resolve. */
+  def namedTables(tables: Seq[String], queries: Seq[String]): Seq[String] =
+    tables.filter { t =>
+      val token = java.util.regex.Pattern.compile(
+        "(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(t) + "(?![A-Za-z0-9_])",
+        java.util.regex.Pattern.CASE_INSENSITIVE)
+      queries.exists(q => token.matcher(q).find())
+    }
 }

@@ -134,20 +134,42 @@ object TablePipeline {
     }
 
   /** Shared driver-side concurrency scaffold (NUM_OF_BUFFERS analog):
-    * run `work` per table on a bounded pool, propagate the first
-    * failure, always shut the pool down. One implementation for every
-    * table-parallel driver loop (runAll, the CLI's DMS branch). */
-  def foreachTableConcurrently(tables: Seq[String], parallelism: Int)
-                              (work: String => Unit): Unit = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    * apply `f` to every item on a bounded pool and return the results in
+    * INPUT order. One implementation for every driver loop that submits
+    * Spark actions in parallel (runAll, the CLI's DMS branch, view
+    * registration and validation probes).
+    *
+    * Fail-fast: after the first failure no queued item starts; the call
+    * waits for the items already running, then rethrows that first
+    * failure unwrapped. So nothing keeps writing output after the call
+    * has thrown. The pool is always shut down. */
+  def mapConcurrently[A, B](xs: Seq[A], parallelism: Int)(f: A => B): Seq[B] = {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
+    val failure = new AtomicReference[Throwable]()
     val pool = Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(tables.map(t => Future(work(t)))), Duration.Inf)
-    finally pool.shutdown()
+    try {
+      val tasks = xs.map { x =>
+        pool.submit(new Callable[Option[B]] {
+          def call(): Option[B] =
+            if (failure.get != null) None
+            else try Some(f(x)) catch {
+              case t: Throwable => failure.compareAndSet(null, t); None
+            }
+        })
+      }
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      Option(failure.get).foreach(t => throw t)
+      tasks.map(_.get().get)
+    } finally pool.shutdownNow()
   }
+
+  /** `mapConcurrently` for per-table side effects. */
+  def foreachTableConcurrently(tables: Seq[String], parallelism: Int)
+                              (work: String => Unit): Unit =
+    mapConcurrently(tables, parallelism)(work)
 
   /** Byte copy through Hadoop FileSystem — works for file://, hdfs://,
     * s3a:// alike (java.nio would treat a URI as a relative local path),

@@ -14,7 +14,8 @@ import graft.config.{Validation, Validations, ValueCheck}
   *
   * The all-rows assertion is pushed into the engine as
   * `count(rows violating pred) == 0` — one aggregate, no collect of the
-  * probe result.
+  * probe result. Probes run concurrently on a bounded driver pool; their
+  * results and the failure `runOrThrow` reports keep declaration order.
   */
 object Validator {
 
@@ -27,8 +28,13 @@ object Validator {
     case ValueCheck.Contains(v) => col(columnToCheck).cast("string").contains(lit(v))
   }
 
-  def run(spark: SparkSession, validations: Validations): Seq[Result] =
-    validations.validations.map { v =>
+  /** Runs every probe, up to `parallelism` at a time on the driver pool
+    * (`TablePipeline.mapConcurrently`); each probe is one Spark job, so
+    * small probes overlap instead of queueing. Results come back in
+    * DECLARATION order whatever order the probes finish in. */
+  def run(spark: SparkSession, validations: Validations,
+          parallelism: Int = 1): Seq[Result] =
+    TablePipeline.mapConcurrently(validations.validations, parallelism) { v =>
       val probe = spark.sql(v.query)
       val pred = compilePredicate(v.columnToCheck, v.check)
       val violations = probe.filter(!pred || pred.isNull).count()
@@ -36,13 +42,14 @@ object Validator {
     }
 
   /** SKIP_VALIDATIONS gate (result_validator.rs:143-148): returns true
-    * when all pass (or skipped); throws on first failure otherwise,
-    * mirroring the reference's panic. */
+    * when all pass (or skipped); otherwise throws for the first failing
+    * probe in declaration order, mirroring the reference's panic. */
   def runOrThrow(spark: SparkSession, validations: Validations,
-                 skip: Boolean = sys.env.get("SKIP_VALIDATIONS").contains("true"))
+                 skip: Boolean = sys.env.get("SKIP_VALIDATIONS").contains("true"),
+                 parallelism: Int = 1)
       : Boolean = {
     if (skip) return true
-    val results = run(spark, validations)
+    val results = run(spark, validations, parallelism)
     results.find(!_.passed).foreach { r =>
       throw new IllegalStateException(
         s"validation failed: query='${r.validation.query}' " +

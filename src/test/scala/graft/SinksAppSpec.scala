@@ -206,6 +206,61 @@ class SinksAppSpec extends SparkTestBase {
     assert(!written.columns.contains("o_drifted"))
   }
 
+  test("CLI e2e: validations register only the tables probes name and fail on a violation") {
+    assume(!sys.env.get("SKIP_VALIDATIONS").contains("true"))
+    import java.nio.file.{Files, Paths}
+    val in = Files.createTempDirectory("graft_cli_val_in").toString
+    val out = Files.createTempDirectory("graft_cli_val_out").toString
+    val root = Files.createTempDirectory("graft_cli_val_cfg")
+    val cfgDir = Files.createDirectory(root.resolve("sync")).toString
+    val valDir = Files.createDirectory(root.resolve("validations"))
+    // vt_supplier is configured; the rest are pass-through copies of region.
+    // vt_su is a prefix of two named tables; vt_unnamed appears nowhere
+    val copies = Seq("vt_cte", "vt_sub", "vt_tick", "vt_mixed", "vt_su", "vt_unnamed")
+    val all = "vt_supplier" +: copies
+    all.foreach(spark.catalog.dropTempView)
+    Files.copy(Paths.get(sf(), "supplier.parquet"), Paths.get(in, "vt_supplier.parquet"))
+    copies.foreach(t => Files.copy(Paths.get(sf(), "region.parquet"), Paths.get(in, s"$t.parquet")))
+    Files.writeString(Paths.get(cfgDir, "d-s-sync.toml"),
+      """
+      [[tables]]
+      table_name = "vt_supplier"
+      [tables.anonymization_type]
+      type = "Multi"
+      [[tables.anonymization_type.column_transformations]]
+      column_name = "s_name"
+      [tables.anonymization_type.column_transformations.transformation_type]
+      type = "Custom"
+      operation_type = "fake_companyname_transformation"
+      """)
+    def probe(query: String, value: Int) =
+      s"""[[validations]]
+         |query = "$query"
+         |column_to_check = "n"
+         |[validations.value_check_type]
+         |type = "Equals"
+         |value = "$value"
+         |""".stripMargin
+    val passing = Seq(
+      probe("SELECT count(*) AS n FROM vt_supplier WHERE s_name LIKE 'Supplier#%'", 0),
+      probe("WITH r AS (SELECT r_name FROM vt_cte) SELECT count(*) AS n FROM r", 5),
+      probe("SELECT (SELECT count(*) FROM vt_sub) AS n", 5),
+      probe("SELECT count(*) AS n FROM `vt_tick` WHERE r_regionkey >= 0", 5),
+      probe("SELECT count(*) AS n FROM VT_Mixed", 5))
+    val args = Main.parse(Seq("anonymize", "--input-dir", in, "--output-dir", out,
+      "--db-name", "d", "--schema-name", "s", "--config-dir", cfgDir, "--parallelism", "3"))
+    Files.writeString(valDir.resolve("d-s.toml"), passing.mkString("\n"))
+    Main.run(args, spark)
+    for (t <- all)
+      assert(spark.catalog.tableExists(t) == !Set("vt_su", "vt_unnamed")(t), t)
+
+    val bad = "SELECT count(*) AS n FROM vt_supplier"
+    Files.writeString(valDir.resolve("d-s.toml"), (passing :+ probe(bad, 0)).mkString("\n"))
+    val e = intercept[IllegalStateException](Main.run(args, spark))
+    assert(e.getMessage.contains(s"query='$bad'"), e.getMessage)
+    all.foreach(spark.catalog.dropTempView)
+  }
+
   test("ngram jaccard df-cap: hot shingles dropped, rare pairs survive") {
     val hot = "common common common" // one repeated shingle everywhere
     val df = Seq((1L, s"$hot alpha beta gamma delta"),
