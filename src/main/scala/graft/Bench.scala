@@ -7,11 +7,15 @@ import org.apache.spark.sql.SparkSession
   * per-query seconds, followed by a COMPACT totals-only JSON line as
   * the LAST stdout line (same `metric`/`value`/`unit`/`sf` keys). The
   * full line is also written to BENCH.json (or $SPARK_GRAFT_BENCH_OUT)
-  * and to a cpus-stamped BENCH_c$CPUS.json so multi-config runs never
-  * clobber each other. Rationale: the full line is ~25 KB for 351
-  * queries and a consumer that keeps only a log tail starts mid-line
-  * and can parse nothing (r19/r20); the compact trailer is the
-  * machine-readable summary, the files carry the detail.
+  * and to a stamped BENCH_c<cpus>_<sf>.json (`<sf>` the basename of
+  * SPARK_GRAFT_SF_DIR, e.g. BENCH_c8_sf0.1.json) in the same directory
+  * — next to $SPARK_GRAFT_BENCH_OUT when set, else the working
+  * directory — so runs at other core counts or scales never clobber
+  * each other; the compact line's `queries_file` names it. Rationale:
+  * the full line is ~25 KB for 351 queries and a consumer that keeps
+  * only a log tail starts mid-line and can parse nothing; the
+  * compact trailer is the machine-readable summary, the files carry the
+  * detail.
   *
   * Each query is forced through the `noop` sink — a real write of every
   * row with no I/O — so projections (fakers, fingerprints, features)
@@ -220,14 +224,13 @@ object Bench {
     // anyone with the whole log), and a COMPACT totals-only line —
     // same keys, guaranteed to fit any sane tail — is printed LAST.
     println(line)
-    val stamped = s"BENCH_c$cpus.json"
-    val outPaths = sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
-      // explicit destination wins; still add the cpus-stamped copy so
-      // a multi-config caller never clobbers one config with another
-      case Some(p) => Seq(p, stamped)
-      case None    => Seq("BENCH.json", stamped)
-    }
-    outPaths.distinct.foreach { p =>
+    // explicit destination wins; the stamped copy goes next to it so a
+    // multi-config caller never clobbers one config with another
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json"))
+    val sfTag = java.nio.file.Paths.get(sfDir).getFileName
+    val stamped = out.resolveSibling(s"BENCH_c${cpus}_$sfTag.json").toString
+    Seq(out.toString, stamped).distinct.foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (line + "\n").getBytes("UTF-8"))
     }

@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.config.{AnonymizationConfig, ConfigLoader}
 import graft.fakegen.FakeGen
@@ -207,7 +208,7 @@ object Main {
         ConfigLoader.parseValidations(java.nio.file.Files.readString(validationsPath))
       TablePipeline.mapConcurrently(
           namedTables(tables, validations.validations.map(_.query)), a.parallelism) { t =>
-        spark.read.parquet(s"${a.outputDir}/$t.parquet").createOrReplaceTempView(t)
+        Bridge.readParquet(spark, s"${a.outputDir}/$t.parquet").createOrReplaceTempView(t)
       }
       Validator.runOrThrow(spark, validations, skip = false, parallelism = a.parallelism)
       println("[graft] validations passed")

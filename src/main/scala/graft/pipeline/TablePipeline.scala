@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.config._
 import graft.fakegen.FakeGen
@@ -112,6 +113,13 @@ object TablePipeline {
     * reference's server-side-copy fast path
     * (anonymization_dataframe_operator.rs:246-258, 369-394).
     *
+    * A configured table's schema comes from one driver-side footer read
+    * of its first data file, as with Spark's `mergeSchema=false`
+    * ([[org.apache.spark.sql.graftbridge.Bridge.readParquet]]): the write
+    * is the table's only Spark job, no schema-inference job runs — the
+    * analog of the reference reading the footer in-process
+    * (anonymization_dataframe_operator.rs:108-134).
+    *
     * Tables run concurrently on the driver (NUM_OF_BUFFERS analog,
     * cdc_operator.rs:352-357): each Spark action is submitted from its
     * own pool thread, so small tables don't serialize behind big ones.
@@ -124,7 +132,7 @@ object TablePipeline {
     foreachTableConcurrently(tables, parallelism) { table =>
       config.tableConfig(table) match {
         case Some(cfg) =>
-          val df = spark.read.parquet(s"$inDir/$table.parquet")
+          val df = Bridge.readParquet(spark, s"$inDir/$table.parquet")
           build(df, cfg, seed).write.mode("overwrite")
             .parquet(s"$outDir/$table.parquet")
         case None => // pass-through fast path: no decode, no Spark job

@@ -4,6 +4,7 @@ import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Output adapters (SURVEY.md §2.9). The engine core only ever sees the
   * trait; the JDBC implementation is isolated here because the offline
@@ -44,7 +45,7 @@ final class ParquetSink(outDir: String,
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val merged =
       if (fs.exists(target)) {
-        val current = spark.read.parquet(target.toString)
+        val current = Bridge.readParquet(spark, target.toString)
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions._
         val w = Window.partitionBy(pk.map(col): _*)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.CdcMerge
 
@@ -15,7 +16,11 @@ import graft.operators.CdcMerge
   * Listing happens driver-side through the Hadoop FileSystem API (works
   * for file://, s3a://, hdfs:// alike); the data reads are plain
   * multi-path parquet scans, so Spark parallelizes by file/row-group
-  * and pushes filters down — there is no per-file loop.
+  * and pushes filters down — there is no per-file loop. The LOAD set and
+  * the CDC set each take their schema from one driver-side footer read
+  * of their first (path-sorted) file, as with Spark's `mergeSchema=false`
+  * ([[org.apache.spark.sql.graftbridge.Bridge.readParquet]]), so no
+  * schema-inference job runs.
   */
 object DmsFiles {
 
@@ -95,10 +100,10 @@ object DmsFiles {
                    asOfTs: Long): DataFrame = {
     val files = list(spark, dir, AbsolutePath)
     require(files.loadFiles.nonEmpty, s"no LOAD files under $dir")
-    val full = spark.read.parquet(files.loadFiles: _*)
+    val full = Bridge.readParquet(spark, files.loadFiles: _*)
     if (files.cdcFiles.isEmpty) full
     else CdcMerge.snapshotAsOf(full,
-      spark.read.parquet(files.cdcFiles: _*), pk, asOfTs)
+      Bridge.readParquet(spark, files.cdcFiles: _*), pk, asOfTs)
   }
 
   /** Current table state: union of LOAD files, schema-drift-checked,
@@ -108,14 +113,14 @@ object DmsFiles {
                expectedColumns: Option[Set[String]] = None): DataFrame = {
     val files = list(spark, dir, mode)
     require(files.loadFiles.nonEmpty, s"no LOAD files under $dir")
-    val full = spark.read.parquet(files.loadFiles: _*)
+    val full = Bridge.readParquet(spark, files.loadFiles: _*)
     // expectedColumns is the target catalog: check symmetrically (extra
     // AND missing columns abort — see CdcMerge.checkSchemaDrift)
     expectedColumns.foreach(cols =>
       CdcMerge.checkSchemaDrift(full, cols, requireAll = true))
     if (files.cdcFiles.isEmpty) full
     else {
-      val delta = spark.read.parquet(files.cdcFiles: _*)
+      val delta = Bridge.readParquet(spark, files.cdcFiles: _*)
       expectedColumns.foreach(cols =>
         CdcMerge.checkSchemaDrift(delta, cols, requireAll = true))
       CdcMerge.applyDelta(full, delta, pk)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
@@ -70,7 +71,7 @@ object CdcStream {
         // what a half-finished delete left at the target
         if (fs.exists(new Path(tmp, "_SUCCESS"))) swapIn()
         else rmrf(tmp) // incomplete write from a dead batch
-        val snap = spark.read.parquet(snapshotDir)
+        val snap = Bridge.readParquet(spark, snapshotDir)
         val merged = graft.operators.CdcMerge
           .applyDelta(snap, batch, pk, tieBreakers)
         merged.write.mode("overwrite").parquet(tmp.toString)

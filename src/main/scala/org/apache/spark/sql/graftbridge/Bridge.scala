@@ -25,7 +25,7 @@ trait DeclaredInputTypes
     declaredInputTypes
 }
 
-object Bridge {
+object Bridge extends org.apache.spark.internal.Logging {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
@@ -73,6 +73,71 @@ object Bridge {
       }
     }
     (cmp, computer)
+  }
+
+  /** A Parquet read whose schema comes from ONE driver-side footer read:
+    * the footer of the first data file, converted exactly as Spark's
+    * schema inference converts it, then `spark.read.schema(s).parquet`.
+    * A plain `spark.read.parquet(paths)` infers the schema through
+    * `SchemaMergeUtils.mergeSchemasInParallel` — a whole Spark job,
+    * outside any SQL execution, even for one file — although with
+    * `mergeSchema=false` (the default) that job also reads a single
+    * footer and lets it stand for the whole set. Same schema, no job.
+    *
+    * The first data file is found the way Spark's inference orders
+    * leaf files (by full path): the first path given (glob-expanded,
+    * as the read itself expands it);
+    * inside a directory, the first visible entry in path order,
+    * descending into subdirectories (a partitioned layout). Hidden names
+    * (`_*` without `=`, `.*`, `*._COPYING_`) are skipped by Spark's own
+    * listing predicate. Parquet summary files (`_metadata`,
+    * `_common_metadata`; Spark does not write them by default) are not
+    * consulted. For a file list, the FIRST path decides, so callers pass
+    * lists sorted by path (`DmsFiles.list` does) — the file Spark's
+    * inference picks. No path or no data file fails naming the paths;
+    * there is no fallback to inference. */
+  def readParquet(spark: org.apache.spark.sql.SparkSession, paths: String*)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.spark.util.HadoopFSUtils
+    require(paths.nonEmpty, "readParquet: no path given")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val root = new Path(paths.head)
+    val fs = root.getFileSystem(hadoopConf)
+    def visible(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      !HadoopFSUtils.shouldFilterOutPathName(n) &&
+        n != "_metadata" && n != "_common_metadata"
+    }
+    // a directory sorts as "<path>/", i.e. where its leaves sort
+    def firstFile(entries: Seq[FileStatus]): Option[FileStatus] =
+      entries.sortBy(s => s.getPath.toString + (if (s.isDirectory) "/" else ""))
+        .iterator.flatMap { s =>
+          if (s.isDirectory) firstFile(fs.listStatus(s.getPath).toSeq.filter(visible))
+          else Some(s)
+        }.nextOption()
+    val file = firstFile(Option(fs.globStatus(root)).toSeq.flatten).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"no Parquet data file to read the schema from: ${paths.mkString(", ")}"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS)
+    // the converter ParquetFileFormat.mergeSchemasInParallel builds (the
+    // SQLConf constructor also reads flags inference leaves at default)
+    val conf = session.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer), converter)
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Drain the SparkListener event bus (private[spark]): lets tests
@@ -204,18 +269,32 @@ object Bridge {
           // rewrap must DEGRADE to the plain checkpoint (correct, just
           // without the layout), never turn every lineage cut into a
           // NoSuchFieldException
-          scala.util.Try {
+          try {
             ofRows(df.sparkSession, new LogicalRDD(lr.output, lr.rdd, part,
               ordering, lr.isStreaming,
               priv[Option[org.apache.spark.sql.connector.read.streaming.SparkDataStream]]("stream"))(
               priv[org.apache.spark.sql.classic.SparkSession]("session"),
               priv[Option[org.apache.spark.sql.catalyst.plans.logical.Statistics]]("originStats"),
               priv[Option[org.apache.spark.sql.catalyst.expressions.ExpressionSet]]("originConstraints")))
-          }.getOrElse(ck)
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              if (layoutFallbackCounter.getAndIncrement() == 0)
+                logWarning(s"localCheckpointKeepingLayout cannot rewrap the " +
+                  s"checkpoint ($e); lineage cuts fall back to the plain " +
+                  "checkpoint without its layout (logged once per JVM, " +
+                  "counted in Bridge.layoutFallbacks)")
+              ck
+          }
         }
       case _ => ck
     }
   }
+
+  private val layoutFallbackCounter = new java.util.concurrent.atomic.AtomicLong
+
+  /** How many lineage cuts in this JVM fell back to the plain checkpoint
+    * because the layout-keeping rewrap threw. */
+  def layoutFallbacks: Long = layoutFallbackCounter.get
 
   /** Whether the session's CacheManager holds any cached plan — the
     * lifecycle assertion tests need (CacheManager is private[sql] and

@@ -36,6 +36,9 @@ class LineageCutSpec extends SparkTestBase {
       assert(got === expected, "kept layout must not change results")
       assert(!hasExchange(reAgg),
         "a same-key aggregation over a kept full-width layout must not re-shuffle")
+      // the rewrap works on this Spark version: no cut fell back
+      assert(org.apache.spark.sql.graftbridge.Bridge.layoutFallbacks == 0,
+        s"layout rewrap fell back on Spark ${spark.version}")
       LineageCut.release(ck)
     } finally spark.conf.set(key, old)
   }

@@ -261,6 +261,89 @@ class SinksAppSpec extends SparkTestBase {
     all.foreach(spark.catalog.dropTempView)
   }
 
+  test("CLI e2e: every Spark job of a run belongs to a SQL execution (no schema-inference job)") {
+    assume(!sys.env.get("SKIP_VALIDATIONS").contains("true"))
+    import java.nio.file.{Files, Paths}
+    import graft.operators.CdcMerge
+    /** (jobs started, of which without spark.sql.execution.id) */
+    def jobsOf(run: => Unit): (Int, Int) = {
+      val jobs = jobsDuring(run)._2
+      (jobs.size, jobs.count(e => Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isEmpty))
+    }
+    val supplierCfg =
+      """
+      [[tables]]
+      table_name = "ej_supplier"
+      [tables.anonymization_type]
+      type = "Multi"
+      [[tables.anonymization_type.column_transformations]]
+      column_name = "s_name"
+      [tables.anonymization_type.column_transformations.transformation_type]
+      type = "Custom"
+      operation_type = "fake_companyname_transformation"
+      """
+
+    // plain layout: a configured table, a pass-through copy, probes on both
+    val in = Files.createTempDirectory("graft_jobs_in").toString
+    val out = Files.createTempDirectory("graft_jobs_out").toString
+    val root = Files.createTempDirectory("graft_jobs_cfg")
+    val cfgDir = Files.createDirectory(root.resolve("sync")).toString
+    val valDir = Files.createDirectory(root.resolve("validations"))
+    Files.copy(Paths.get(sf(), "supplier.parquet"), Paths.get(in, "ej_supplier.parquet"))
+    Files.copy(Paths.get(sf(), "region.parquet"), Paths.get(in, "ej_region.parquet"))
+    Files.writeString(Paths.get(cfgDir, "d-s-sync.toml"), supplierCfg)
+    Files.writeString(valDir.resolve("d-s.toml"),
+      """[[validations]]
+        |query = "SELECT count(*) AS n FROM ej_supplier WHERE s_name LIKE 'Supplier#%'"
+        |column_to_check = "n"
+        |[validations.value_check_type]
+        |type = "Equals"
+        |value = "0"
+        |
+        |[[validations]]
+        |query = "SELECT count(*) AS n FROM ej_region"
+        |column_to_check = "n"
+        |[validations.value_check_type]
+        |type = "Equals"
+        |value = "5"
+        |""".stripMargin)
+    val (plainJobs, plainOutside) = jobsOf(Main.run(Main.parse(Seq("anonymize",
+      "--input-dir", in, "--output-dir", out, "--db-name", "d",
+      "--schema-name", "s", "--config-dir", cfgDir, "--parallelism", "2")), spark))
+    Seq("ej_supplier", "ej_region").foreach(spark.catalog.dropTempView)
+    assert(plainJobs > 0)
+    assert(plainOutside == 0,
+      s"$plainOutside of $plainJobs jobs ran outside a SQL execution (plain layout)")
+
+    // DMS layout: LOAD + CDC files, PK merge, catalog drift check
+    val dmsIn = Files.createTempDirectory("graft_jobs_dms").toString
+    val dmsOut = Files.createTempDirectory("graft_jobs_dms_out").toString
+    val dmsCfg = Files.createTempDirectory("graft_jobs_dms_cfg").toString
+    val dir = s"$dmsIn/orders"
+    def writeAs(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val staged = s"$dir/tmp_$name"
+      df.coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, Paths.get(dir, name))
+    }
+    val orders = spark.read.parquet(sf() + "/orders.parquet")
+    writeAs(orders, "LOAD00000001.parquet")
+    writeAs(orders.limit(5).withColumn(CdcMerge.OpColumn, lit("U"))
+      .withColumn(CdcMerge.TsColumn, lit(1L)), "20240105-000001.parquet")
+    val (dmsJobs, dmsOutside) = jobsOf(Main.run(Main.parse(Seq("anonymize",
+      "--input-dir", dmsIn, "--output-dir", dmsOut, "--db-name", "d",
+      "--schema-name", "s", "--config-dir", dmsCfg,
+      "--dms", "--pk", "orders=o_orderkey",
+      "--expect-cols", "orders=o_orderkey,o_custkey,o_orderstatus," +
+        "o_totalprice,o_orderdate,o_orderpriority")), spark))
+    assert(dmsJobs > 0)
+    assert(dmsOutside == 0,
+      s"$dmsOutside of $dmsJobs jobs ran outside a SQL execution (DMS layout)")
+    assert(spark.read.parquet(s"$dmsOut/orders.parquet").count() == orders.count())
+  }
+
   test("ngram jaccard df-cap: hot shingles dropped, rare pairs survive") {
     val hot = "common common common" // one repeated shingle everywhere
     val df = Seq((1L, s"$hot alpha beta gamma delta"),

@@ -15,6 +15,25 @@ trait SparkTestBase extends AnyFunSuite {
     * TIMESTAMP_MICROS) — the same dispatch SparkEntry's queries use. */
   def eventsUs(dir: String = "sf0.001"): org.apache.spark.sql.DataFrame =
     SparkEntry.events(spark, sf(dir))
+
+  /** `body`'s result and the Spark jobs started while it ran (listener
+    * bus drained before and after, so the list is complete). */
+  def jobsDuring[T](body: => T)
+      : (T, Seq[org.apache.spark.scheduler.SparkListenerJobStart]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    Bridge.flushListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Bridge.flushListenerBus(spark.sparkContext)
+      (out, jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {
