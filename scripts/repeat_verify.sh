@@ -11,7 +11,7 @@ set -u
 SF_DIR=${1:?sfDir}
 QUERIES=${2:-q_source_report}
 N=${3:-3}
-# normalize once: every consumer (Verify's env filter, the oracle prune,
+# normalize once: every consumer (the runner's query filter, the oracle prune,
 # the expected-PASS count) must tokenize identically, or a space after a
 # comma flags a green run as RED
 QUERIES=$(echo "$QUERIES" | tr -d '[:space:]')
@@ -23,7 +23,7 @@ sbt -batch clean compile >/tmp/repeat_verify_build.log 2>&1 || {
 fail=0
 for i in $(seq 1 "$N"); do
   out=$(mktemp -d /tmp/verify_rep_XXXX)
-  SPARK_GRAFT_VERIFY_ONLY="$QUERIES" \
+  SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
     sbt -batch "runMain graft.Verify $SF_DIR $out" \
     >/tmp/repeat_verify_run_$i.log 2>&1 || { echo "run $i: Verify FAILED"; fail=1; continue; }
   for q in ${QUERIES//,/ }; do

@@ -55,8 +55,8 @@ step "focused A/B rerun of the slowest queries (writes BENCH_AB.json)"
 bash scripts/bench_ab.sh 10 3 || fail=1
 
 step "regenerate PLANS.md (LAST: mtime must postdate the code)"
-sbt -batch "runMain graft.tools.PlanDump /root/testdata/sf0.01 PLANS.md" \
-  >/tmp/round_check_plans.log 2>&1 || { echo "PLANDUMP FAILED"; fail=1; }
+sbt -batch "runMain graft.Bench plans /root/testdata/sf0.01 PLANS.md" \
+  >/tmp/round_check_plans.log 2>&1 || { echo "PLANS FAILED"; fail=1; }
 echo "PLANS.md: $(grep -c '^## ' PLANS.md) plans"
 
 echo

@@ -2656,7 +2656,7 @@ private[graft] object Oracles {
        "  THEN CAST(c_nationkey AS VARCHAR) ELSE '__OTHER__' END " +
        "  AS c_nationkey FROM customer"),
     // NOT the exact-jaccard oracle: simhash prunes by HAMMING, and
-    // true-jaccard pairs reach hamming 13 on this data (HammingAudit)
+    // true-jaccard pairs reach hamming 13 on this data (measured)
     // — the oracle replicates the pruner's exact semantics instead
     "q_dedup_simhash" -> simhashPrunedJaccardSql,
     "q_dedup_eval" -> simhashFlagRateSql,

@@ -2061,7 +2061,7 @@ object SparkEntry {
     // expected to have recall 1 (pinned in TextDedupSpec for the dedup
     // twin of this config); the exact brute-force SQL is then a true
     // oracle. Top-10-over-random-vectors recall (the regime where ANN
-    // is inherently approximate) is measured by RecallEval + specs, not
+    // is inherently approximate) is measured by specs, not
     // hash-compared.
     "q_ann_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")

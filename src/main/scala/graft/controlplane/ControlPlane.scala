@@ -61,9 +61,6 @@ object ControlPlane {
   def dropSchemaSql(schema: String): String =
     s"DROP SCHEMA IF EXISTS ${ident(schema)} CASCADE"
 
-  def createExtensionsSql(extensions: Seq[String]): Seq[String] =
-    extensions.map(e => s"CREATE EXTENSION IF NOT EXISTS ${ident(e)}")
-
   /** Grants to application users (target_db_finalizer.rs:62-109). */
   def grantSql(schema: String, user: String, owner: Boolean): Seq[String] = {
     val s = ident(schema); val u = ident(user)
@@ -89,16 +86,6 @@ object ControlPlane {
     val L = java.util.Locale.ROOT
     s"${db.toUpperCase(L)}_${schema.toUpperCase(L)}_POST_IMPORT_SQL_QUERIES"
   }
-
-  /** pg_dump/pg_restore invocations (target_db_preparator.rs:29-49,
-    * 109-135) — returned as argv for [[Shell.run]]. */
-  def pgDumpSchemaArgs(url: String, schema: String, outFile: String): Seq[String] =
-    Seq("pg_dump", "--schema-only", "--schema", schema,
-      "--format", "custom", "--file", outFile, url)
-
-  def pgRestoreArgs(url: String, dumpFile: String): Seq[String] =
-    Seq("pg_restore", "--no-owner", "--no-privileges",
-      "--dbname", url, dumpFile)
 }
 
 /** Statement execution seam: production = JDBC connection; tests =

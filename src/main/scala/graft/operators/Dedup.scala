@@ -760,7 +760,7 @@ object Dedup {
     // (min of 3): plain 1.9s, lazy-persist 7.0s (cold-cache scan
     // stages race and re-run the corpus minhash per consumer), eager
     // checkpoint 5.6s (r6 shape; also launched the full bucket join at
-    // plan-construction time, which PlanDump paid per round).
+    // plan-construction time, which the plan dump paid per round).
     val bucketHits = bandedOf(sigsC).select(col("band"), col("bandHash"), col("id").as("id_a"))
       .join(broadcast(
         bandedOf(sigsR).select(col("band"), col("bandHash"), col("id").as("id_b"))),

@@ -799,15 +799,6 @@ object Graph {
       .select(col("n_communities"),
         expr("__ei + __ct div 2").as("m_edges"), col("q_ppm"))
 
-  /** Per-edge triangle SUPPORT of a canonical (a < b) edge list: how
-    * many triangles contain each edge, zero-support edges included.
-    * Degree-oriented exactly like [[triangleCount]] — every triangle
-    * materializes as ONE oriented wedge + closure (the oriented
-    * triangle has a unique source), so no hub blows up the wedge join;
-    * each triangle then credits its three edges. */
-  private def edgeSupport(und: DataFrame): DataFrame =
-    withSupport(und, orientedTriangles(und))
-
   /** Oriented triangle ENUMERATION of a canonical (a < b) edge list —
     * each triangle exactly once (the oriented triangle has a unique
     * source under the degree orientation), carrying its three canonical

@@ -144,8 +144,8 @@ object Ivf {
   /** Shared candidate scoring for the inverted-list tiers (this trainer
     * path and [[IvfIndex.topK]]): join probed queries to lists on
     * cluster, exclude self-pairs, cosine-score, rank through the common
-    * ANN selection contract — ONE implementation of the tie-break that
-    * RecallEval compares across tiers. `lists`: (cluster, corpus_id,
+    * ANN selection contract — ONE implementation of the tie-break, so
+    * recall compares across tiers. `lists`: (cluster, corpus_id,
     * cv); `q`: (cluster, query_id, qv). */
   private[operators] def rankListCandidates(lists: DataFrame, q: DataFrame,
                                             k: Int): DataFrame = {

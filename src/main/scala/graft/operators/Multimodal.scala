@@ -110,13 +110,6 @@ object Multimodal {
         col("meta.mime").as("mime"), lit(width).as("width"),
         lit(height).as("height"), col("meta.duration_ms").as("duration_ms")))
 
-  /** Perceptual hash column from the REAL raster decode: nullable
-    * struct(hi, lo) — [[ImageCodec.dHashRow]]'s 64 gradient bits as
-    * 32-bit halves. Codegen'd projection, no shuffle. */
-  def withDHash(assets: DataFrame): DataFrame =
-    assets.withColumn("dhash",
-      Bridge.column(ImageDHashExpr(Bridge.expression(col("content")))))
-
   /** Image NEAR-DUPLICATE pairs by perceptual hash: id pairs whose
     * dHashes differ in at most `maxHamming` bits — recompressed,
     * resized, or lightly-edited copies of the same picture. Banded
@@ -167,25 +160,6 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
-
-  /** Decoded per-clip stats from the REAL PCM decode ([[AudioCodec]]):
-    * one nullable struct column (rate, channels, bit depth, frame
-    * count, per-channel centered sums, |sample| sum — all integers, so
-    * they cross engine/hash boundaries losslessly). Same contract as
-    * [[decodedStats]]: corrupt audio nulls the struct instead of
-    * failing the job; pure codegen'd projection, no shuffle, no UDF. */
-  def decodedAudioStats(assets: DataFrame): DataFrame =
-    assets.withColumn("audio_stats",
-      Bridge.column(AudioStatsExpr(Bridge.expression(col("content")))))
-
-  /** REAL nearest-neighbor audio resample on decoded frames (not raw
-    * bytes), re-encoded as WAV at the clip's own rate/channels/depth;
-    * meta picks up the fixed output duration. Null content or
-    * undecodable bytes null out. */
-  def resampledAudio(assets: DataFrame, outFrames: Int): DataFrame =
-    assets.withColumn("content",
-      Bridge.column(AudioResampleExpr(
-        Bridge.expression(col("content")), outFrames)))
 
   /** Per-partition batched processing — the seam where a COMPRESSED
     * codec library would live (one decoder instance per PARTITION, not

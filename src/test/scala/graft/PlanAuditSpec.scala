@@ -453,8 +453,8 @@ class PlanAuditSpec extends SparkTestBase {
     spark.sparkContext.addSparkListener(listener)
     try {
       // library-caller shape: disjoint ids by construction => no guard
-      // scan, no checkpoint job — PLAN CONSTRUCTION is free; PlanDump /
-      // Bench / plan-only tooling stop paying a corpus scan per call
+      // scan, no checkpoint job — PLAN CONSTRUCTION is free; the runner's
+      // plans / bench modes stop paying a corpus scan per call
       val pairs = graft.operators.Dedup.contaminationPairs(
         docs.filter(col("doc_id") >= 20), docs.filter(col("doc_id") < 20),
         "doc_id", "text", checkDisjoint = false)
