@@ -155,9 +155,12 @@ object Bench {
     * and `action` run on it inside a candidate scope: the dedup tier's
     * eager checkpoints are built inside the timed region (construction
     * IS part of the query's cost) and released at its end. A throw is
-    * returned, not raised; the mode decides how to record it. */
-  private def runQuery[T](spark: SparkSession, sfDir: String, query: Query)(
+    * returned, not raised; the mode decides how to record it. The name
+    * goes to stderr first, so Spark's log lines (such as WindowExec's
+    * "No Partition Defined" warning) can be tied to the query. */
+  private def runQuery[T](spark: SparkSession, sfDir: String, name: String, query: Query)(
       action: DataFrame => T): Either[Throwable, Run[T]] = {
+    System.err.println(s"[query] $name")
     spark.catalog.clearCache()
     val loadAtStart = osBean.getSystemLoadAverage
     val t0 = System.nanoTime()
@@ -197,7 +200,7 @@ object Bench {
     // elapsed time would be a bogus small number for a broken query
     def timeQuery(name: String, query: Query): Option[Run[Unit]] =
       (1 to runs).flatMap { _ =>
-        runQuery(spark, sfDir, query)(_.write.format("noop").mode("overwrite").save()) match {
+        runQuery(spark, sfDir, name, query)(_.write.format("noop").mode("overwrite").save()) match {
           case Right(r) => Some(r)
           case Left(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -278,7 +281,7 @@ object Bench {
              outDir: String, oracles: Map[String, String] = SparkEntry.oracleSql): Unit = {
     Files.createDirectories(Paths.get(outDir))
     queries.foreach { case (name, query) =>
-      runQuery(spark, sfDir, query)(
+      runQuery(spark, sfDir, name, query)(
         _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       ).left.foreach { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -330,7 +333,7 @@ object Bench {
     sb ++= "PushedFilters; `bcast` = broadcast join; `#ex` = shuffle\n"
     sb ++= "exchange count.\n\n"
     queries.foreach { case (name, query) =>
-      runQuery(spark, sfDir, query)(finalPlan) match {
+      runQuery(spark, sfDir, name, query)(finalPlan) match {
         case Right(Run(plan, _, _, _)) =>
           val nExchange = "(?<!Broadcast)Exchange".r.findAllIn(plan).length
           val flags = Seq(
@@ -356,7 +359,7 @@ object Bench {
               outDir: String, suffix: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
     queries.foreach { case (name, query) =>
-      runQuery(spark, sfDir, query) { df =>
+      runQuery(spark, sfDir, name, query) { df =>
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         s"== explain(formatted) — $name at $sfDir ==\n\n$formatted\n\n" +
@@ -394,7 +397,7 @@ object Bench {
       (1 to 2).foreach { run =>
         seen.synchronized(seen.clear())
         val t0 = System.currentTimeMillis()
-        val res = runQuery(spark, sfDir, query)(_.write.format("noop").mode("overwrite").save())
+        val res = runQuery(spark, sfDir, name, query)(_.write.format("noop").mode("overwrite").save())
         val t1 = System.currentTimeMillis()
         res match {
           case Left(e) => System.err.println(s"[jobs] $name run $run FAILED: ${e.getMessage}")

@@ -147,17 +147,27 @@ object Main {
     val spark = SparkSession.builder()
       .master(a.master)
       .appName(s"graft-anonymize-${a.dbName}-${a.schemaName}")
-      .config("spark.sql.shuffle.partitions",
-        a.master match { case m if m.contains("[") =>
-          m.dropWhile(_ != '[').drop(1).takeWhile(_ != ']') match {
-            case "*" => "32"; case n => n }
-          case _ => "200" })
+      .config("spark.sql.shuffle.partitions", shufflePartitions(a.master).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(a, spark) finally spark.stop()
+  }
+
+  /** Shuffle partitions for a master URL: the thread count of a local
+    * master (`local` = 1, `local[N]` and `local[N,maxFailures]` = N,
+    * `local[*]` and `local[*,maxFailures]` = the available processors),
+    * Spark's default 200 for any other master. */
+  def shufflePartitions(master: String): Int = {
+    val LocalThreads = """local\[(\*|\d+)(?:,\d+)?\]""".r
+    master match {
+      case "local" => 1
+      case LocalThreads("*") => Runtime.getRuntime.availableProcessors
+      case LocalThreads(n) => n.toInt
+      case _ => 200
+    }
   }
 
   /** The whole CLI flow minus session lifecycle — e2e-testable in-JVM
@@ -189,8 +199,8 @@ object Main {
           expectedColumns = a.expectCols.get(table).map(_.toSet))
         val cfg = config.tableConfig(table).getOrElse(
           graft.config.TableConfig(table, graft.config.AnonymizationType.Multi(Nil)))
-        TablePipeline.build(snap, cfg, seed).write.mode("overwrite")
-          .parquet(s"${a.outputDir}/$table.parquet")
+        TablePipeline.write(TablePipeline.build(snap, cfg, seed), cfg,
+          s"${a.outputDir}/$table.parquet")
       }
     } else {
       TablePipeline.runAll(spark, config, a.inputDir, a.outputDir, tables,

@@ -1,5 +1,10 @@
 package graft.fakegen
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Deterministic fake-data generators.
   *
   * Replicates the reference's load-bearing determinism contract
@@ -35,21 +40,25 @@ object FakeGen {
   private final val FnvOffset = 0xcbf29ce484222325L
   private final val FnvPrime = 0x100000001b3L
 
-  /** FNV-1a 64-bit over UTF-8 bytes. Stable across JVMs/platforms. */
-  def hash64(bytes: Array[Byte], offset: Int, len: Int): Long = {
+  /** FNV-1a 64-bit over the `len` bytes at `base`/`offset` (Spark's
+    * `Platform` addressing), read in place. */
+  private def fnv1a(base: AnyRef, offset: Long, len: Int): Long = {
     var h = FnvOffset
-    var i = offset
-    val end = offset + len
-    while (i < end) {
-      h ^= (bytes(i) & 0xffL)
+    var i = 0
+    while (i < len) {
+      h ^= (Platform.getByte(base, offset + i) & 0xffL)
       h *= FnvPrime
       i += 1
     }
     h
   }
 
+  /** FNV-1a 64-bit over UTF-8 bytes. Stable across JVMs/platforms. */
+  def hash64(bytes: Array[Byte], offset: Int, len: Int): Long =
+    fnv1a(bytes, Platform.BYTE_ARRAY_OFFSET + offset, len)
+
   def hash64(s: String): Long = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val b = s.getBytes(StandardCharsets.UTF_8)
     hash64(b, 0, b.length)
   }
 
@@ -62,10 +71,13 @@ object FakeGen {
     x
   }
 
-  /** Per-cell seed: combine the value hash with the global seed
-    * (transformator.rs:128-144 analog). */
-  @inline def cellSeed(value: String, globalSeed: Long): Long =
-    mix64(hash64(value) ^ mix64(globalSeed))
+  /** Per-cell seed: the hash of the value's UTF-8 bytes, read in place,
+    * combined with the global seed (transformator.rs:128-144 analog). */
+  private def cellSeed(base: AnyRef, offset: Long, len: Int, globalSeed: Long): Long =
+    mix64(fnv1a(base, offset, len) ^ mix64(globalSeed))
+
+  private def cellSeed(value: UTF8String, globalSeed: Long): Long =
+    cellSeed(value.getBaseObject, value.getBaseOffset, value.numBytes, globalSeed)
 
   /** Tiny deterministic RNG stream (SplitMix64). Allocation-free usage:
     * callers hold the state as a local Long and call `next`. */
@@ -77,120 +89,208 @@ object FakeGen {
     if (v < 0) v + n else v
   }
 
+  // ---- output assembly --------------------------------------------------
+  // Every kernel builds its output as UTF-8 bytes in one exact-size array
+  // (a single wordlist entry is returned as the shared array: UTF8String
+  // never writes to its bytes). The writers below copy into `out` at `at`
+  // and return the end; with `out == null` they only measure.
+
+  private def put(w: Array[Byte], out: Array[Byte], at: Int): Int = {
+    if (out != null) System.arraycopy(w, 0, out, at, w.length)
+    at + w.length
+  }
+
+  private def put(b: Char, out: Array[Byte], at: Int): Int = {
+    if (out != null) out(at) = b.toByte
+    at + 1
+  }
+
+  /** Decimal digits of `n >= 0`. */
+  private def putInt(n: Int, out: Array[Byte], at: Int): Int = {
+    var end = at + 1
+    var x = n
+    while (x >= 10) { x /= 10; end += 1 }
+    if (out != null) {
+      x = n
+      var i = end - 1
+      while (i >= at) { out(i) = ('0' + x % 10).toByte; x /= 10; i -= 1 }
+    }
+    end
+  }
+
+  /** `a + " " + b`. */
+  private def spaced(a: Array[Byte], b: Array[Byte]): UTF8String = {
+    val out = new Array[Byte](a.length + 1 + b.length)
+    put(b, out, put(' ', out, put(a, out, 0)))
+    UTF8String.fromBytes(out)
+  }
+
+  /** `String.length <= 1` (UTF-16 units) of valid UTF-8: empty, or one
+    * code point of at most 3 bytes (a 4-byte one is a surrogate pair). */
+  private def atMostOneUtf16Unit(value: UTF8String): Boolean = {
+    val n = value.numBytes
+    n == 0 || (n < 4 && UTF8String.numBytesForFirstByte(value.getByte(0)) == n)
+  }
+
   // ---- generator kernels ------------------------------------------------
-  // Each takes the ORIGINAL cell value + global seed and returns the fake.
-  // All are total functions (no exceptions) and null-intolerant (callers
-  // handle null via expression null-propagation).
+  // Each takes the ORIGINAL cell value (valid UTF-8, see `dispatch`) or its
+  // cell seed, plus the global seed, and returns the fake. All are total
+  // functions (no exceptions) and null-intolerant (callers handle null via
+  // expression null-propagation).
 
-  def firstName(value: String, seed: Long): String = {
-    val s = cellSeed(value, seed)
-    Wordlists.firstNames(draw(s, Wordlists.firstNames.length))
-  }
+  private def firstNameIndex(cs: Long): Int = draw(cs, Wordlists.firstNames.length)
 
-  def lastName(value: String, seed: Long): String = {
-    // Domain-separate from firstName so fullName's parts look independent.
-    val s = next(cellSeed(value, seed) ^ 0x1337L)
-    Wordlists.lastNames(draw(s, Wordlists.lastNames.length))
-  }
+  // Domain-separate from firstName so fullName's parts look independent.
+  private def lastNameIndex(cs: Long): Int =
+    draw(next(cs ^ 0x1337L), Wordlists.lastNames.length)
 
-  def fullName(value: String, seed: Long): String =
-    firstName(value, seed) + " " + lastName(value, seed)
-
-  def companyName(value: String, seed: Long): String = {
-    var s = cellSeed(value, seed) ^ 0xc0c0L
-    s = next(s); val stem = Wordlists.companyStems(draw(s, Wordlists.companyStems.length))
-    s = next(s); val suffix = Wordlists.companySuffixes(draw(s, Wordlists.companySuffixes.length))
-    stem + " " + suffix
+  private def companyName(cs: Long): UTF8String = {
+    var s = cs ^ 0xc0c0L
+    s = next(s); val stem = Wordlists.companyStemsUtf8(draw(s, Wordlists.companyStems.length))
+    s = next(s); val suffix = Wordlists.companySuffixesUtf8(draw(s, Wordlists.companySuffixes.length))
+    spaced(stem, suffix)
   }
 
   /** Safe fake email: first.last{NN}@example.{com|org|net} — never a real
     * deliverable domain (RFC 2606 reserved), like the reference's faker
-    * `safe_email` (transformator.rs:31). */
-  def email(value: String, seed: Long): String = {
-    var s = cellSeed(value, seed) ^ 0xe4a11L
-    s = next(s); val fn = Wordlists.firstNames(draw(s, Wordlists.firstNames.length)).toLowerCase
-    s = next(s); val ln = Wordlists.lastNames(draw(s, Wordlists.lastNames.length)).toLowerCase
+    * `safe_email` (transformator.rs:31). Written at `at` (see `put`). */
+  private def writeEmail(cs: Long, out: Array[Byte], at: Int): Int = {
+    var s = cs ^ 0xe4a11L
+    s = next(s); val fn = Wordlists.firstNamesLowerUtf8(draw(s, Wordlists.firstNames.length))
+    s = next(s); val ln = Wordlists.lastNamesLowerUtf8(draw(s, Wordlists.lastNames.length))
     s = next(s); val num = draw(s, 100)
-    s = next(s); val dom = Wordlists.emailDomains(draw(s, Wordlists.emailDomains.length))
-    val sb = new java.lang.StringBuilder(fn.length + ln.length + dom.length + 8)
-    sb.append(fn).append('.').append(ln)
-    if (num < 50) sb.append(num) // ~half get a numeric suffix, like faker
-    sb.append('@').append(dom)
-    sb.toString
+    s = next(s); val dom = Wordlists.emailDomainsUtf8(draw(s, Wordlists.emailDomains.length))
+    var p = put(ln, out, put('.', out, put(fn, out, at)))
+    if (num < 50) p = putInt(num, out, p) // ~half get a numeric suffix, like faker
+    put(dom, out, put('@', out, p))
+  }
+
+  private def email(cs: Long): UTF8String = {
+    val out = new Array[Byte](writeEmail(cs, null, 0))
+    writeEmail(cs, out, 0)
+    UTF8String.fromBytes(out)
   }
 
   /** Composite address: "<bldg> <street> <zip> <city> <postcode>" — the
     * reference assembles 4 faker parts (transformator.rs:33-39). */
-  def address(value: String, seed: Long): String = {
-    var s = cellSeed(value, seed) ^ 0xadd12L
+  private def address(cs: Long): UTF8String = {
+    var s = cs ^ 0xadd12L
     s = next(s); val bldg = 1 + draw(s, 9999)
-    s = next(s); val street = Wordlists.streets(draw(s, Wordlists.streets.length))
+    s = next(s); val street = Wordlists.streetsUtf8(draw(s, Wordlists.streets.length))
     s = next(s); val zip = 10000 + draw(s, 89999)
-    s = next(s); val city = Wordlists.cities(draw(s, Wordlists.cities.length))
+    s = next(s); val city = Wordlists.citiesUtf8(draw(s, Wordlists.cities.length))
     s = next(s); val postcode = 10000 + draw(s, 89999)
-    s"$bldg $street $zip $city $postcode"
+    // 14 = four spaces + the 5-digit zip and postcode
+    val out = new Array[Byte](putInt(bldg, null, 0) + street.length + city.length + 14)
+    var p = put(' ', out, putInt(bldg, out, 0))
+    p = put(' ', out, put(street, out, p))
+    p = put(' ', out, putInt(zip, out, p))
+    p = put(' ', out, put(city, out, p))
+    putInt(postcode, out, p)
+    UTF8String.fromBytes(out)
+  }
+
+  private val HexDigits = "0123456789abcdef".getBytes(StandardCharsets.US_ASCII)
+
+  /** The low `n` hex digits of `x`, lowercase, at `at`. */
+  private def putHex(x: Long, n: Int, out: Array[Byte], at: Int): Unit = {
+    var v = x
+    var i = at + n - 1
+    while (i >= at) { out(i) = HexDigits((v & 0xf).toInt); v >>>= 4; i -= 1 }
   }
 
   /** "fake_md5" in the reference actually emits a UUIDv4 string
-    * (transformator.rs:40,60). Deterministic per cell here. */
-  def uuid(value: String, seed: Long): String = {
-    var s = cellSeed(value, seed) ^ 0x3d5L
-    s = next(s); val hi0 = s
-    s = next(s); val lo0 = s
-    val hi = (hi0 & ~0x000000000000f000L) | 0x0000000000004000L // version 4
-    val lo = (lo0 & ~0xc000000000000000L) | 0x8000000000000000L // variant 10
-    new java.util.UUID(hi, lo).toString
+    * (transformator.rs:40,60). Deterministic per cell here; laid out as
+    * `java.util.UUID.toString` (8-4-4-4-12 lowercase hex). */
+  private def uuid(cs: Long): UTF8String = {
+    var s = cs ^ 0x3d5L
+    s = next(s); val hi = (s & ~0x000000000000f000L) | 0x0000000000004000L // version 4
+    s = next(s); val lo = (s & ~0xc000000000000000L) | 0x8000000000000000L // variant 10
+    val out = new Array[Byte](36)
+    putHex(hi >>> 32, 8, out, 0); out(8) = '-'.toByte
+    putHex(hi >>> 16, 4, out, 9); out(13) = '-'.toByte
+    putHex(hi, 4, out, 14); out(18) = '-'.toByte
+    putHex(lo >>> 48, 4, out, 19); out(23) = '-'.toByte
+    putHex(lo, 12, out, 24)
+    UTF8String.fromBytes(out)
   }
 
   /** Per-character digit scramble: every ASCII digit is replaced by a
     * *different* digit; non-digits (formatting: '+', spaces, dashes) kept;
     * strings of length <= 1 returned unchanged
-    * (fake_phone_transformator.rs:14-62). Value-seeded (divergence above). */
-  def phone(value: String, seed: Long): String = {
-    if (value.length <= 1) return value
+    * (fake_phone_transformator.rs:14-62). Value-seeded (divergence above).
+    * An ASCII digit is one byte in UTF-8 and no byte of a multi-byte
+    * sequence is below 0x80, so scanning bytes visits the same digits. */
+  private def phone(value: UTF8String, seed: Long): UTF8String = {
+    if (atMostOneUtf16Unit(value)) return value
     var s = cellSeed(value, seed) ^ 0x9403eL
-    val chars = value.toCharArray
+    val out = new Array[Byte](value.numBytes) // a copy: never write into the input's bytes
+    value.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET)
     var i = 0
-    while (i < chars.length) {
-      val c = chars(i)
+    while (i < out.length) {
+      val c = out(i)
       if (c >= '0' && c <= '9') {
         s = next(s)
         // draw from the 9 digits != original => guaranteed different
         val d = draw(s, 9)
         val orig = c - '0'
         val repl = if (d >= orig) d + 1 else d
-        chars(i) = ('0' + repl).toChar
+        out(i) = ('0' + repl).toByte
       }
       i += 1
     }
-    new String(chars)
+    UTF8String.fromBytes(out)
   }
 
   /** Postgres-array-literal email rewrite: "{a,b,c}" -> "{f1,f2,f3}" with
     * each element faked independently (seeded by the ELEMENT value, so the
     * same address fakes identically here and in scalar email columns).
+    * Elements are split on every ',' (empty ones kept, as `split(",", -1)`)
+    * and trimmed of chars <= U+0020 (as `String.trim`).
     * Length <= 1 returned unchanged (fake_multi_email_transformator.rs:15-54).
     * A longer NON-braced value is treated as one address and faked —
     * an anonymization primitive must FAIL CLOSED: passing a malformed
     * or bare scalar through verbatim would leak the original PII. */
-  def multiEmail(value: String, seed: Long): String = {
-    if (value.length <= 1) return value
-    val inner =
-      if (value.charAt(0) == '{' && value.charAt(value.length - 1) == '}')
-        value.substring(1, value.length - 1)
-      else return email(value, seed)
-    if (inner.isEmpty) return value
-    val parts = inner.split(",", -1)
-    val sb = new java.lang.StringBuilder(value.length + 16)
-    sb.append('{')
-    var i = 0
-    while (i < parts.length) {
-      if (i > 0) sb.append(',')
-      sb.append(email(parts(i).trim, seed))
+  private def multiEmail(value: UTF8String, seed: Long): UTF8String = {
+    if (atMostOneUtf16Unit(value)) return value
+    val n = value.numBytes
+    if (value.getByte(0) != '{' || value.getByte(n - 1) != '}')
+      return email(cellSeed(value, seed))
+    if (n == 2) return value // "{}"
+    val base = value.getBaseObject
+    val off = value.getBaseOffset
+    var parts = 1
+    var i = 1
+    while (i < n - 1) { if (value.getByte(i) == ',') parts += 1; i += 1 }
+    val seeds = new Array[Long](parts)
+    var k = 0
+    var start = 1
+    i = 1
+    while (i < n) {
+      if (i == n - 1 || value.getByte(i) == ',') {
+        var a = start
+        var b = i
+        while (a < b && (value.getByte(a) & 0xff) <= 0x20) a += 1
+        while (b > a && (value.getByte(b - 1) & 0xff) <= 0x20) b -= 1
+        seeds(k) = cellSeed(base, off + a, b - a, seed)
+        k += 1
+        start = i + 1
+      }
       i += 1
     }
-    sb.append('}')
-    sb.toString
+    var len = parts + 1 // the braces and the commas between parts
+    k = 0
+    while (k < parts) { len += writeEmail(seeds(k), null, 0); k += 1 }
+    val out = new Array[Byte](len)
+    var p = put('{', out, 0)
+    k = 0
+    while (k < parts) {
+      if (k > 0) p = put(',', out, p)
+      p = writeEmail(seeds(k), out, p)
+      k += 1
+    }
+    put('}', out, p)
+    UTF8String.fromBytes(out)
   }
 
   // ---- dispatch (called from generated code) ----------------------------
@@ -206,22 +306,48 @@ object FakeGen {
   final val KindMultiEmail = 8
 
   /** Single static entry point used by the codegen'd Catalyst expression
-    * (graft.functions.FakeExpr). Operates on UTF8String to stay inside
-    * Tungsten's row format; the String hop happens once, here. */
-  def dispatch(kind: Int, value: org.apache.spark.unsafe.types.UTF8String,
-               seed: Long): org.apache.spark.unsafe.types.UTF8String = {
-    val v = value.toString
-    val out = (kind: @annotation.switch) match {
-      case KindFirstName  => firstName(v, seed)
-      case KindLastName   => lastName(v, seed)
-      case KindFullName   => fullName(v, seed)
-      case KindCompany    => companyName(v, seed)
-      case KindEmail      => email(v, seed)
-      case KindAddress    => address(v, seed)
-      case KindUuid       => uuid(v, seed)
+    * (graft.functions.FakeExpr). Works on the cell's UTF-8 bytes in place:
+    * the value is hashed where it lies and the fake is assembled as bytes,
+    * with no `String` decode or encode per cell.
+    *
+    * Invalid UTF-8 is first replaced by its `String` round trip (each
+    * malformed sequence becomes U+FFFD, as `toString` decodes it), so a
+    * cell fakes the same as its decoded `String` would. Spark's `isValid`
+    * and that round trip agree on which inputs need it. */
+  def dispatch(kind: Int, value: UTF8String, seed: Long): UTF8String = {
+    val v = if (value.isValid) value else UTF8String.fromString(value.toString)
+    (kind: @annotation.switch) match {
+      case KindFirstName =>
+        UTF8String.fromBytes(Wordlists.firstNamesUtf8(firstNameIndex(cellSeed(v, seed))))
+      case KindLastName =>
+        UTF8String.fromBytes(Wordlists.lastNamesUtf8(lastNameIndex(cellSeed(v, seed))))
+      case KindFullName =>
+        val cs = cellSeed(v, seed)
+        spaced(Wordlists.firstNamesUtf8(firstNameIndex(cs)),
+               Wordlists.lastNamesUtf8(lastNameIndex(cs)))
+      case KindCompany    => companyName(cellSeed(v, seed))
+      case KindEmail      => email(cellSeed(v, seed))
+      case KindAddress    => address(cellSeed(v, seed))
+      case KindUuid       => uuid(cellSeed(v, seed))
       case KindPhone      => phone(v, seed)
       case KindMultiEmail => multiEmail(v, seed)
     }
-    org.apache.spark.unsafe.types.UTF8String.fromString(out)
   }
+
+  // ---- String entry points ----------------------------------------------
+  // For callers outside Spark's row format; each is `dispatch` on the
+  // value's UTF-8 encoding, so both faces give the same fake.
+
+  private def fakeString(kind: Int, value: String, seed: Long): String =
+    dispatch(kind, UTF8String.fromString(value), seed).toString
+
+  def firstName(value: String, seed: Long): String = fakeString(KindFirstName, value, seed)
+  def lastName(value: String, seed: Long): String = fakeString(KindLastName, value, seed)
+  def fullName(value: String, seed: Long): String = fakeString(KindFullName, value, seed)
+  def companyName(value: String, seed: Long): String = fakeString(KindCompany, value, seed)
+  def email(value: String, seed: Long): String = fakeString(KindEmail, value, seed)
+  def address(value: String, seed: Long): String = fakeString(KindAddress, value, seed)
+  def uuid(value: String, seed: Long): String = fakeString(KindUuid, value, seed)
+  def phone(value: String, seed: Long): String = fakeString(KindPhone, value, seed)
+  def multiEmail(value: String, seed: Long): String = fakeString(KindMultiEmail, value, seed)
 }

@@ -3,7 +3,8 @@ package graft.fakegen
 /** Small bundled wordlists backing the fake-data generators — the Spark
   * analog of the reference's embedded faker dictionaries
   * (rustic-faker-transformations, `fake` crate wordlists). Arrays, not
-  * Seqs: indexed access from the codegen'd hot path.
+  * Seqs: indexed access from the codegen'd hot path, which reads the
+  * UTF-8 encodings (`*Utf8`) made once here.
   */
 object Wordlists {
 
@@ -60,4 +61,23 @@ object Wordlists {
     * reference faker's `safe_email` semantics. */
   val emailDomains: Array[String] = Array(
     "example.com", "example.org", "example.net")
+
+  private def utf8(words: Array[String]): Array[Array[Byte]] =
+    words.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  // Lowercased with Locale.ROOT, not the JVM default: under tr-TR
+  // "Ines".toLowerCase() is "\u0131nes", and a fake must not depend on
+  // the locale of the JVM that made it.
+  private def lowerUtf8(words: Array[String]): Array[Array[Byte]] =
+    utf8(words.map(_.toLowerCase(java.util.Locale.ROOT)))
+
+  val firstNamesUtf8: Array[Array[Byte]] = utf8(firstNames)
+  val lastNamesUtf8: Array[Array[Byte]] = utf8(lastNames)
+  val firstNamesLowerUtf8: Array[Array[Byte]] = lowerUtf8(firstNames)
+  val lastNamesLowerUtf8: Array[Array[Byte]] = lowerUtf8(lastNames)
+  val companyStemsUtf8: Array[Array[Byte]] = utf8(companyStems)
+  val companySuffixesUtf8: Array[Array[Byte]] = utf8(companySuffixes)
+  val streetsUtf8: Array[Array[Byte]] = utf8(streets)
+  val citiesUtf8: Array[Array[Byte]] = utf8(cities)
+  val emailDomainsUtf8: Array[Array[Byte]] = utf8(emailDomains)
 }

@@ -15,7 +15,9 @@ import graft.fakegen.FakeGen
   * [[graft.fakegen.FakeGen.dispatch]], so the whole projection stays
   * inside one WholeStageCodegen span with no boxing, no
   * Scala-function-object indirection, and no catalyst<->scala converters
-  * (which a ScalaUDF would insert per row per column).
+  * (which a ScalaUDF would insert per row per column). `dispatch` takes
+  * and returns `UTF8String` and fakes on its UTF-8 bytes, so no cell is
+  * decoded to a `String` on the way.
   *
   * Deterministic (same input row => same output) => safe under task
   * retries and speculative execution; Spark may freely recompute

@@ -17,40 +17,43 @@ import graft.functions.anon
   */
 object Transformators {
 
-  /** Registry keys, verbatim from the reference config surface. */
-  val operationTypes: Set[String] = Set(
-    "fake_firstname_transformation",
-    "fake_lastname_transformation",
-    "fake_name_transformation",
-    "fake_companyname_transformation",
-    "fake_email_transformation",
-    "fake_address_transformation",
-    "fake_md5_transformation",
-    "fake_phone_transformation",
-    "fake_multi_email_transformation",
-    "fake_email_with_id_prefix_transformation")
+  /** One faker op: its expression over `input`, and whether it fakes
+    * each distinct input to its own output (a UUID, a digit scramble, a
+    * composite address, an id-prefixed or per-element email), so a
+    * column of it has as many distinct values as its input. The wordlist
+    * fakers (names, company, email) draw from bounded wordlists. */
+  private final case class FakerOp(fake: (Column, Long) => Column,
+                                   uniquePerInput: Boolean)
 
-  /** Compile one Custom operation to an expression over `input` (and, for
-    * the id-prefix op, the sibling `id` column —
-    * fake_email_with_id_prefix_transformator.rs:19-62). Unknown names
-    * error, matching the reference's registry panic
+  /** The registry, keys verbatim from the reference config surface. The
+    * id-prefix op also reads the sibling `id` column
+    * (fake_email_with_id_prefix_transformator.rs:19-62). */
+  private val ops: Map[String, FakerOp] = Map(
+    "fake_firstname_transformation"   -> FakerOp(anon.fakeFirstName, false),
+    "fake_lastname_transformation"    -> FakerOp(anon.fakeLastName, false),
+    "fake_name_transformation"        -> FakerOp(anon.fakeName, false),
+    "fake_companyname_transformation" -> FakerOp(anon.fakeCompanyName, false),
+    "fake_email_transformation"       -> FakerOp(anon.fakeEmail, false),
+    "fake_address_transformation"     -> FakerOp(anon.fakeAddress, true),
+    "fake_md5_transformation"         -> FakerOp(anon.fakeUuid, true),
+    "fake_phone_transformation"       -> FakerOp(anon.fakePhone, true),
+    "fake_multi_email_transformation" -> FakerOp(anon.fakeMultiEmail, true),
+    "fake_email_with_id_prefix_transformation" ->
+      FakerOp(anon.fakeEmailWithIdPrefix(col("id"), _, _), true))
+
+  /** Registry keys, verbatim from the reference config surface. */
+  val operationTypes: Set[String] = ops.keySet
+
+  /** Whether `operationType` fakes each distinct input to its own output. */
+  def uniquePerInput(operationType: String): Boolean =
+    ops.get(operationType).exists(_.uniquePerInput)
+
+  /** Compile one Custom operation to an expression over `input`. Unknown
+    * names error, matching the reference's registry panic
     * (anonymization_config_table_impl.rs:111). */
   def custom(operationType: String, input: Column, seed: Long): Column =
-    operationType match {
-      case "fake_firstname_transformation"   => anon.fakeFirstName(input, seed)
-      case "fake_lastname_transformation"    => anon.fakeLastName(input, seed)
-      case "fake_name_transformation"        => anon.fakeName(input, seed)
-      case "fake_companyname_transformation" => anon.fakeCompanyName(input, seed)
-      case "fake_email_transformation"       => anon.fakeEmail(input, seed)
-      case "fake_address_transformation"     => anon.fakeAddress(input, seed)
-      case "fake_md5_transformation"         => anon.fakeUuid(input, seed)
-      case "fake_phone_transformation"       => anon.fakePhone(input, seed)
-      case "fake_multi_email_transformation" => anon.fakeMultiEmail(input, seed)
-      case "fake_email_with_id_prefix_transformation" =>
-        anon.fakeEmailWithIdPrefix(col("id"), input, seed)
-      case other =>
-        throw new IllegalArgumentException(s"unknown operation_type: $other")
-    }
+    ops.getOrElse(operationType, throw new IllegalArgumentException(
+      s"unknown operation_type: $operationType")).fake(input, seed)
 
   /** Compile a ColumnTransformation to the output expression for its
     * column, given the column's current Spark type.
@@ -85,10 +88,7 @@ object Transformators {
     */
   def applyMulti(df: DataFrame, transforms: Seq[ColumnTransformation],
                  seed: Long): DataFrame = {
-    val present = df.schema.fieldNames.toSet
-    val byColumn = transforms
-      .filter(t => present.contains(t.columnName))
-      .map(t => t.columnName -> t).toMap
+    val byColumn = transformsByColumn(df, transforms)
     val outCols = df.schema.fields.map { f =>
       byColumn.get(f.name) match {
         case Some(t) => compile(t, f.dataType, seed)
@@ -96,6 +96,16 @@ object Transformators {
       }
     }
     df.select(outCols.toIndexedSeq: _*)
+  }
+
+  /** The transform [[applyMulti]] applies to each column of `df`: columns
+    * absent from `df` are dropped, and of several transforms for one
+    * column the last wins. */
+  def transformsByColumn(df: DataFrame, transforms: Seq[ColumnTransformation])
+      : Map[String, ColumnTransformation] = {
+    val present = df.schema.fieldNames.toSet
+    transforms.filter(t => present.contains(t.columnName))
+      .map(t => t.columnName -> t).toMap
   }
 
   /** Null-byte sanitization over every String column of the frame

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StringType
 
 import graft.config._
 import graft.fakegen.FakeGen
@@ -28,7 +29,7 @@ object NoOpWholeTableTransformator extends WholeTableTransformator {
   * hammer for tables with no per-column config. */
 final class FakeAllStringsTransformator(seed: Long = graft.fakegen.FakeGen.DefaultSeed)
     extends WholeTableTransformator {
-  val name = "fake_all_strings"
+  val name = FakeAllStringsTransformator.Name
   def apply(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.StringType
@@ -39,6 +40,10 @@ final class FakeAllStringsTransformator(seed: Long = graft.fakegen.FakeGen.Defau
     }
     df.select(outCols.toIndexedSeq: _*)
   }
+}
+
+object FakeAllStringsTransformator {
+  final val Name = "fake_all_strings"
 }
 
 /** Per-table plan builder — the Spark re-expression of the reference's
@@ -133,13 +138,43 @@ object TablePipeline {
       config.tableConfig(table) match {
         case Some(cfg) =>
           val df = Bridge.readParquet(spark, s"$inDir/$table.parquet")
-          build(df, cfg, seed).write.mode("overwrite")
-            .parquet(s"$outDir/$table.parquet")
+          write(build(df, cfg, seed), cfg, s"$outDir/$table.parquet")
         case None => // pass-through fast path: no decode, no Spark job
           copyRecursive(spark, s"$inDir/$table.parquet",
                         s"$outDir/$table.parquet")
       }
     }
+
+  /** Write one built table as Parquet at `path`, replacing what is there.
+    * A column faked one output per distinct input, whose input is
+    * distinct-valued ([[DistinctValued]]), gets no dictionary
+    * (`parquet.enable.dictionary#<col>=false`, read by parquet-hadoop's
+    * per-column config): it has as many distinct values as its input, so
+    * the writer would build a dictionary per page only to drop it. Every
+    * other column keeps Parquet's default. */
+  def write(df: DataFrame, cfg: TableConfig, path: String): Unit =
+    noDictionaryColumns(df, cfg).foldLeft(df.write.mode("overwrite")) { (w, c) =>
+      w.option(s"parquet.enable.dictionary#$c", "false")
+    }.parquet(path)
+
+  /** The output columns of `cfg` written without a dictionary: a
+    * distinct-valued input column under a `Custom` op that fakes each
+    * distinct input to its own output, without `retain_if_empty`, or
+    * under `fake_all_strings` (a UUID each). */
+  private[graft] def noDictionaryColumns(df: DataFrame, cfg: TableConfig): Seq[String] = {
+    val uniquePerInput = cfg.anonymizationType match {
+      case AnonymizationType.Multi(transforms) =>
+        Transformators.transformsByColumn(df, transforms).values.collect {
+          case ColumnTransformation(c, TransformationType.Custom(op), false)
+              if Transformators.uniquePerInput(op) => c
+        }.toSeq
+      case AnonymizationType.Single(FakeAllStringsTransformator.Name) =>
+        df.schema.fields.collect { case f if f.dataType == StringType => f.name }.toSeq
+      case AnonymizationType.Single(_) => Nil
+    }
+    val distinct = DistinctValued(df, uniquePerInput)
+    uniquePerInput.filter(distinct).sorted
+  }
 
   /** Shared driver-side concurrency scaffold (NUM_OF_BUFFERS analog):
     * apply `f` to every item on a bounded pool and return the results in

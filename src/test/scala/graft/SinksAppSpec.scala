@@ -58,6 +58,17 @@ class SinksAppSpec extends SparkTestBase {
       "ON CONFLICT (\"id\") DO UPDATE SET \"order\" = EXCLUDED.\"order\"")
   }
 
+  test("shuffle partitions follow the master's thread count") {
+    val cores = Runtime.getRuntime.availableProcessors
+    assert(Main.shufflePartitions("local") == 1)
+    assert(Main.shufflePartitions("local[4]") == 4)
+    assert(Main.shufflePartitions("local[4,2]") == 4)
+    assert(Main.shufflePartitions("local[*]") == cores)
+    assert(Main.shufflePartitions("local[*,3]") == cores)
+    assert(Main.shufflePartitions("spark://host:7077") == 200)
+    assert(Main.shufflePartitions("yarn") == 200)
+  }
+
   test("CLI --pk and --dms parsing") {
     val a = Main.parse(Seq("anonymize", "--dms",
       "--pk", "orders=o_orderkey;lineitem=l_orderkey,l_linenumber"))
