@@ -10,8 +10,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Which columns of a table's Parquet input hold (nearly) one distinct
   * value per row, as the input's own writer recorded it. Read from the
@@ -40,20 +39,9 @@ private[graft] object DistinctValued {
 
   def apply(df: DataFrame, columns: Seq[String]): Set[String] =
     if (columns.isEmpty) Set.empty
-    else largestScannedFile(df).fold(Set.empty[String]) { file =>
+    else Bridge.scannedFiles(df).maxByOption(_.getLen).fold(Set.empty[String]) { file =>
       try read(df, file, columns) catch { case NonFatal(_) => Set.empty }
     }
-
-  /** The largest file under the frame's Parquet scans, from the listings
-    * their file indexes already hold (no file-system call). */
-  private def largestScannedFile(df: DataFrame): Option[FileStatus] =
-    df.queryExecution.analyzed.collect {
-      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
-          if r.fileFormat.isInstanceOf[ParquetFileFormat] => r.location
-    }.flatMap {
-      case index: PartitioningAwareFileIndex => index.allFiles()
-      case _ => Nil
-    }.maxByOption(_.getLen)
 
   private def read(df: DataFrame, file: FileStatus, columns: Seq[String]): Set[String] = {
     val input = HadoopInputFile.fromStatus(file, df.sparkSession.sparkContext.hadoopConfiguration)

@@ -57,9 +57,17 @@ object FakeAllStringsTransformator {
   * Catalyst pushes the filter into the scan ahead of the transforms.
   *
   * Scale notes (100 TB): the whole pipeline is narrow (scan->project),
-  * zero shuffles; `limit(n)` plans as CollectLimit which stops scanning
-  * remaining files once satisfied; filter pushdown prunes row groups
-  * before decode. Nothing here is driver-bound — no collect().
+  * zero shuffles, except that under a write `limit(n)` plans as a
+  * per-task local limit, a one-partition shuffle of at most n rows per
+  * task and a global limit; filter pushdown prunes row groups before
+  * decode. Nothing here is driver-bound — no collect().
+  *
+  * Output layout: Spark's scan gives a table of a few files one task, and
+  * so one output file, per input file, as the reference writes them. In
+  * [[runAll]] a table whose whole input is no larger than
+  * [[OneTaskMaxBytes]] runs as one task and is written as one file
+  * ([[oneTaskIfSmall]]): one task's fixed cost outweighs that much data,
+  * and its limit needs no shuffle.
   */
 object TablePipeline {
 
@@ -128,22 +136,71 @@ object TablePipeline {
     * Tables run concurrently on the driver (NUM_OF_BUFFERS analog,
     * cdc_operator.rs:352-357): each Spark action is submitted from its
     * own pool thread, so small tables don't serialize behind big ones.
+    *
+    * A configured table is written as one file per scan task, which for
+    * a table of a few files is one per input file, except that one whose
+    * whole input is no larger than [[OneTaskMaxBytes]] is written as one
+    * file ([[oneTaskIfSmall]]). A pass-through copy replaces what is at
+    * its destination, as the configured tables' overwrite does; so a
+    * table whose output path is, or holds, its input path fails the run
+    * before any table starts.
     */
   def runAll(spark: SparkSession, config: AnonymizationConfig,
              inDir: String, outDir: String,
              tables: Seq[String],
              seed: Long = FakeGen.DefaultSeed,
-             parallelism: Int = 8): Unit =
+             parallelism: Int = 8): Unit = {
+    tables.foreach(t => requireApart(spark, s"$inDir/$t.parquet", s"$outDir/$t.parquet"))
     foreachTableConcurrently(tables, parallelism) { table =>
       config.tableConfig(table) match {
         case Some(cfg) =>
           val df = Bridge.readParquet(spark, s"$inDir/$table.parquet")
-          write(build(df, cfg, seed), cfg, s"$outDir/$table.parquet")
+          write(build(oneTaskIfSmall(df), cfg, seed), cfg, s"$outDir/$table.parquet")
         case None => // pass-through fast path: no decode, no Spark job
           copyRecursive(spark, s"$inDir/$table.parquet",
                         s"$outDir/$table.parquet")
       }
     }
+  }
+
+  /** Fails unless neither of a table's input and output paths is, or
+    * holds, the other: its write or copy replaces what is at `dst`, and
+    * would delete the input it reads. Checked for every table before any
+    * runs. */
+  private def requireApart(spark: SparkSession, src: String, dst: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: String): Path = {
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }
+    def under(p: Path, dir: Path): Boolean =
+      p == dir || p.toString.startsWith(dir.toString.stripSuffix("/") + "/")
+    val (s, d) = (qualified(src), qualified(dst))
+    require(!under(s, d) && !under(d, s), s"a table's output would replace its own input: $s -> $d")
+  }
+
+  /** The most input bytes, all of a table's files together, that
+    * [[runAll]] runs as one task. One task saves CPU and allocation at
+    * any size, but it fakes on one core what the per-file tasks fake on
+    * several, so past some size the job takes longer when cores are
+    * idle. Measured with `perfbench`'s `pii_wide` table (all ten fakers)
+    * cut to 4 files, run alone on 4 vCPU, against one task per file:
+    * at 3.5 MB `job_s` rose 22 %, outside the noise; at 1 MB it read
+    * +4 % and at 0.5 MB −2 %, both within it. `schema_many`'s configured
+    * tables are 0.1–0.3 MB. */
+  val OneTaskMaxBytes: Long = 512L * 1024
+
+  /** `df` coalesced to one partition when the files it scans hold, all
+    * together, no more than [[OneTaskMaxBytes]]. Such a table's limit,
+    * filter, fakers and write then run as one task, which deserializes
+    * the write job's Hadoop `Configuration` and opens a Parquet writer
+    * once, not once per input file; a limit needs no shuffle either. A
+    * frame with no file scan is returned as it is. */
+  private def oneTaskIfSmall(df: DataFrame): DataFrame = {
+    val files = Bridge.scannedFiles(df)
+    if (files.nonEmpty && files.map(_.getLen).sum <= OneTaskMaxBytes) df.coalesce(1) else df
+  }
 
   /** Write one built table as Parquet at `path`, replacing what is there.
     * A column faked one output per distinct input, whose input is
@@ -216,7 +273,8 @@ object TablePipeline {
 
   /** Byte copy through Hadoop FileSystem — works for file://, hdfs://,
     * s3a:// alike (java.nio would treat a URI as a relative local path),
-    * mirroring the reference's server-side S3 copy. */
+    * mirroring the reference's server-side S3 copy. Whatever is at `dst`
+    * is deleted first ([[requireApart]] keeps that off the input). */
   private def copyRecursive(spark: SparkSession, src: String, dst: String): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
     val conf = spark.sparkContext.hadoopConfiguration
@@ -224,6 +282,8 @@ object TablePipeline {
     val dstP = new Path(dst)
     val srcFs = srcP.getFileSystem(conf)
     val dstFs = dstP.getFileSystem(conf)
+    // FileUtil.copy into an existing directory would nest the copy in it
+    dstFs.delete(dstP, true)
     if (!FileUtil.copy(srcFs, srcP, dstFs, dstP,
         /* deleteSource = */ false, /* overwrite = */ true, conf))
       throw new java.io.IOException(s"pass-through copy failed: $src -> $dst")

@@ -140,6 +140,21 @@ object Bridge extends org.apache.spark.internal.Logging {
     spark.read.schema(schema).parquet(paths: _*)
   }
 
+  /** The files under the frame's Parquet scans, from the listings their
+    * file indexes already hold (no file-system call): for a frame from
+    * [[readParquet]], the files that read listed. */
+  def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[org.apache.hadoop.fs.FileStatus] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.fileFormat.isInstanceOf[ParquetFileFormat] => r.location
+    }.flatMap {
+      case index: PartitioningAwareFileIndex => index.allFiles()
+      case _ => Nil
+    }
+  }
+
   /** Drain the SparkListener event bus (private[spark]): lets tests
     * assert deterministically on listener-observed facts — e.g. "plan
     * construction launched zero jobs" — without sleeping. */
