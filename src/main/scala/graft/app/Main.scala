@@ -125,10 +125,9 @@ object Main {
     val base =
       if (a.includedTables.nonEmpty) a.includedTables
       else a.includedTablesFile match {
-        case Some(f) =>
-          val src = scala.io.Source.fromFile(f)
-          try src.getLines().map(_.trim).filter(_.nonEmpty).toList
-          finally src.close()
+        case Some(f) => // UTF-8, as every config file is read
+          java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+            .linesIterator.map(_.trim).filter(_.nonEmpty).toList
         case None if a.dms =>
           ls(a.inputDir).filter(_.isDirectory).map(_.getName).sorted
         case None =>

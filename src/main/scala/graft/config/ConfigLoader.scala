@@ -41,7 +41,7 @@ object ConfigLoader {
       tableName = name,
       anonymizationType = anonType,
       keepNumOfRecords = t.num("keep_num_of_records"),
-      filterType = t.tbl("filter_type").map(decodeFilter).getOrElse(FilterType.NoFilter),
+      filterType = t.tbl("filter_type").map(decodeFilter(name, _)).getOrElse(FilterType.NoFilter),
       sanitizeNullBytes = t.bool("sanitize_null_bytes").getOrElse(false))
   }
 
@@ -64,10 +64,17 @@ object ConfigLoader {
   }
 
   /** Unknown filter `type` degrades to NoFilter, matching serde's
-    * `#[serde(other)]` default (filter_type_struct.rs:36-38). */
-  private def decodeFilter(t: Toml.Tbl): FilterType = {
+    * `#[serde(other)]` default (filter_type_struct.rs:36-38). An
+    * `AnyOfInt` element that is not a 32-bit integer, or an `AnyOfString`
+    * element that is not a string, fails the load, as serde's
+    * `Vec<i32>`/`Vec<String>` does: a wrapped or dropped value would
+    * silently change which rows are kept. */
+  private def decodeFilter(table: String, t: Toml.Tbl): FilterType = {
     def col = t.str("column").getOrElse("")
     def value = t.str("value").getOrElse("")
+    def values[A](kind: String, expected: String)(element: PartialFunction[Toml.Value, A]): Seq[A] =
+      t.arr("values").map(v => element.applyOrElse(v, (bad: Toml.Value) =>
+        throw new IllegalArgumentException(s"$table: $kind value ${show(bad)} is not $expected")))
     t.str("type") match {
       case Some("Contains")   => FilterType.Contains(col, value)
       case Some("StartsWith") => FilterType.StartsWith(col, value)
@@ -75,12 +82,20 @@ object ConfigLoader {
       case Some("StartsAndEndsWith") => FilterType.StartsAndEndsWith(
         col, t.str("start_value").getOrElse(""), t.str("end_value").getOrElse(""))
       case Some("Equals")     => FilterType.Equals(col, value)
-      case Some("AnyOfInt")   => FilterType.AnyOfInt(col,
-        t.arr("values").collect { case Toml.Num(v) => v.toInt })
-      case Some("AnyOfString") => FilterType.AnyOfString(col,
-        t.arr("values").collect { case Toml.Str(v) => v })
+      case Some("AnyOfInt")   => FilterType.AnyOfInt(col, values("AnyOfInt", "a 32-bit integer") {
+        case Toml.Num(v) if v.isValidInt => v.toInt
+      })
+      case Some("AnyOfString") => FilterType.AnyOfString(col, values("AnyOfString", "a string") {
+        case Toml.Str(v) => v
+      })
       case _ => FilterType.NoFilter
     }
+  }
+
+  private def show(v: Toml.Value): String = v match {
+    case Toml.Str(s) => "\"" + s + "\""
+    case Toml.Num(n) => n.toString
+    case other       => other.toString
   }
 
   // ---- validations ------------------------------------------------------

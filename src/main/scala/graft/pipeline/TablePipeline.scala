@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StringType
 
 import graft.config._
 import graft.fakegen.FakeGen
@@ -202,35 +201,46 @@ object TablePipeline {
     if (files.nonEmpty && files.map(_.getLen).sum <= OneTaskMaxBytes) df.coalesce(1) else df
   }
 
-  /** Write one built table as Parquet at `path`, replacing what is there.
-    * A column faked one output per distinct input, whose input is
+  /** Write one built table as Parquet at `path`, replacing what is there,
+    * with zstd pages at parquet-java's default level, the page codec of
+    * the reference's Polars writer. A column that passes through unchanged
+    * or is faked one output per distinct input, whose input is
     * distinct-valued ([[DistinctValued]]), gets no dictionary
     * (`parquet.enable.dictionary#<col>=false`, read by parquet-hadoop's
     * per-column config): it has as many distinct values as its input, so
-    * the writer would build a dictionary per page only to drop it. Every
-    * other column keeps Parquet's default. */
+    * the writer would build a dictionary per page only to drop it, and the
+    * CPU that saves pays for zstd's. Every other column keeps Parquet's
+    * default. */
   def write(df: DataFrame, cfg: TableConfig, path: String): Unit =
-    noDictionaryColumns(df, cfg).foldLeft(df.write.mode("overwrite")) { (w, c) =>
+    noDictionaryColumns(df, cfg).foldLeft(
+      df.write.mode("overwrite").option("compression", "zstd")) { (w, c) =>
       w.option(s"parquet.enable.dictionary#$c", "false")
     }.parquet(path)
 
   /** The output columns of `cfg` written without a dictionary: a
-    * distinct-valued input column under a `Custom` op that fakes each
-    * distinct input to its own output, without `retain_if_empty`, or
-    * under `fake_all_strings` (a UUID each). */
+    * distinct-valued input column that keeps its values (an untransformed
+    * column under `Multi`, every column under `noop`, a non-string column
+    * under `fake_all_strings`), or that a `Custom` op without
+    * `retain_if_empty` fakes each distinct input to its own output (a
+    * `uniquePerInput` op, or a string column under `fake_all_strings`).
+    * Null-byte sanitizing counts as keeping the values. Replace, Nullify
+    * and wordlist fakers keep the default. */
   private[graft] def noDictionaryColumns(df: DataFrame, cfg: TableConfig): Seq[String] = {
-    val uniquePerInput = cfg.anonymizationType match {
+    val distinctIfInputIs = cfg.anonymizationType match {
       case AnonymizationType.Multi(transforms) =>
-        Transformators.transformsByColumn(df, transforms).values.collect {
-          case ColumnTransformation(c, TransformationType.Custom(op), false)
-              if Transformators.uniquePerInput(op) => c
-        }.toSeq
-      case AnonymizationType.Single(FakeAllStringsTransformator.Name) =>
-        df.schema.fields.collect { case f if f.dataType == StringType => f.name }.toSeq
+        val byColumn = Transformators.transformsByColumn(df, transforms)
+        df.schema.fieldNames.toSeq.filter(c => byColumn.get(c) match {
+          case None => true
+          case Some(ColumnTransformation(_, TransformationType.Custom(op), false)) =>
+            Transformators.uniquePerInput(op)
+          case Some(_) => false
+        })
+      case AnonymizationType.Single(FakeAllStringsTransformator.Name | NoOpWholeTableTransformator.name) =>
+        df.schema.fieldNames.toSeq
       case AnonymizationType.Single(_) => Nil
     }
-    val distinct = DistinctValued(df, uniquePerInput)
-    uniquePerInput.filter(distinct).sorted
+    val distinct = DistinctValued(df, distinctIfInputIs)
+    distinctIfInputIs.filter(distinct).sorted
   }
 
   /** Shared driver-side concurrency scaffold (NUM_OF_BUFFERS analog):

@@ -102,6 +102,35 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg.tables.head.filterType == FilterType.NoFilter)
   }
 
+  private def anyOfFilter(kind: String, values: String) = s"""
+      [[tables]]
+      table_name = "orders"
+      [tables.filter_type]
+      type = "$kind"
+      column = "k"
+      values = $values
+      [tables.anonymization_type]
+      type = "Multi"
+    """
+
+  test("AnyOfInt: a value outside 32 bits or not a number fails the load, naming table and value") {
+    // 4294967297 would wrap to 1 as an Int: rows with k = 1 would be dropped
+    val wide = intercept[IllegalArgumentException](
+      ConfigLoader.parseAnonymization(anyOfFilter("AnyOfInt", "[4294967297, 7]")))
+    assert(wide.getMessage.contains("orders") && wide.getMessage.contains("4294967297"))
+    val text = intercept[IllegalArgumentException](
+      ConfigLoader.parseAnonymization(anyOfFilter("AnyOfInt", "[\"3\", \"7\"]")))
+    assert(text.getMessage.contains("orders") && text.getMessage.contains("\"3\""))
+    assert(ConfigLoader.parseAnonymization(anyOfFilter("AnyOfInt", "[-2147483648, 2147483647]"))
+      .tables.head.filterType == FilterType.AnyOfInt("k", Seq(Int.MinValue, Int.MaxValue)))
+  }
+
+  test("AnyOfString: a non-string value fails the load, naming table and value") {
+    val e = intercept[IllegalArgumentException](
+      ConfigLoader.parseAnonymization(anyOfFilter("AnyOfString", "[\"a\", 5]")))
+    assert(e.getMessage.contains("orders") && e.getMessage.contains("5"))
+  }
+
   test("missing config file => empty config => pass-through") {
     val cfg = ConfigLoader.loadAnonymizationFor("/tmp/definitely-missing", "db", "s")
     assert(cfg == AnonymizationConfig.empty)

@@ -386,4 +386,14 @@ class SinksAppSpec extends SparkTestBase {
     intercept[IllegalArgumentException](
       Main.parse(Seq("--mode", "bogus")))
   }
+
+  test("CLI --included-tables-file is read as UTF-8, whatever the JVM's default charset") {
+    val f = java.nio.file.Files.createTempFile("graft_tables", ".txt")
+    java.nio.file.Files.writeString(f, "tabl\u00e9\n  x  \n\n\u00fdy\n",
+      java.nio.charset.StandardCharsets.UTF_8)
+    val a = Main.parse(Seq("anonymize", "--input-dir", "/in", "--output-dir", "/out",
+      "--db-name", "d", "--schema-name", "s",
+      "--included-tables-file", f.toString, "--excluded-tables", "x"))
+    assert(Main.resolveTables(a) == Seq("tabl\u00e9", "\u00fdy"))
+  }
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -14,26 +15,35 @@ import graft.config._
 import graft.pipeline.TablePipeline
 import graft.sources.DmsFiles
 
-/** The ETL write's per-column Parquet encodings: a faker that fakes each
-  * distinct input to its own output is written without a dictionary when
-  * its input column is distinct-valued, as the input file's own writer
-  * recorded it; everything else keeps Parquet's default, and the rows
-  * are those of a default write. */
+/** The ETL write's page codec and per-column Parquet encodings: every
+  * rewritten table is written with zstd pages, a byte-copied one keeps
+  * its input's bytes; a column that passes through unchanged, or that a
+  * faker fakes each distinct input to its own output, is written without
+  * a dictionary when its input column is distinct-valued, as the input
+  * file's own writer recorded it; everything else keeps Parquet's
+  * default, and the rows are those of a default write. */
 class WriterEncodingSpec extends SparkTestBase {
 
-  /** Column name -> whether any row group of any part file under `dir`
-    * has a dictionary page. */
-  private def dictionaryPages(dir: String): Map[String, Boolean] = {
+  /** Every column chunk of every row group of every part file under `dir`. */
+  private def columnChunks(dir: String): Seq[ColumnChunkMetaData] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(parts.nonEmpty, s"no part files under $dir")
     parts.toSeq.flatMap { f =>
       val reader = ParquetFileReader.open(conf, new Path(f.getPath))
       try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
-        .map(c => c.getPath.toDotString -> c.hasDictionaryPage)
       finally reader.close()
-    }.groupMapReduce(_._1)(_._2)(_ || _)
+    }
   }
+
+  /** Column name -> whether any row group of any part file under `dir`
+    * has a dictionary page. */
+  private def dictionaryPages(dir: String): Map[String, Boolean] =
+    columnChunks(dir).map(c => c.getPath.toDotString -> c.hasDictionaryPage)
+      .groupMapReduce(_._1)(_._2)(_ || _)
+
+  private def codecs(dir: String): Set[CompressionCodecName] =
+    columnChunks(dir).map(_.getCodec).toSet
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.count() == b.count())
@@ -80,22 +90,56 @@ class WriterEncodingSpec extends SparkTestBase {
     TablePipeline.write(built, cfg, out)
     built.write.parquet(ref)
 
-    val unique = Seq("address", "emails", "key", "login", "phone")
+    // `id` passes through and is distinct-valued
+    val unique = Seq("address", "emails", "id", "key", "login", "phone")
     assert(TablePipeline.noDictionaryColumns(built, cfg) == unique)
     val dict = dictionaryPages(out)
-    unique.foreach(c => assert(!dict(c), s"$c: distinct-valued fake written with a dictionary"))
+    unique.foreach(c => assert(!dict(c), s"$c: distinct-valued column written with a dictionary"))
     // the other columns are written as by default, `retained` too
     // (retain_if_empty is left out of the rule); at these cardinalities
     // the default keeps a dictionary for the rest. `token` is faked one
     // output per input too, but its 50 repeated inputs keep it.
     val refDict = dictionaryPages(ref)
-    Seq("id", "name", "email", "token", "tier", "retained").foreach { c =>
+    Seq("name", "email", "token", "tier", "retained").foreach { c =>
       assert(dict(c) == refDict(c), s"$c: not written with Parquet's default")
     }
     Seq("name", "email", "token", "tier").foreach { c =>
       assert(dict(c), s"$c: expected Parquet's default dictionary")
     }
     assertSameRows(spark.read.parquet(out), spark.read.parquet(ref))
+  }
+
+  test("plain layout through runAll: zstd pages; distinct pass-through columns lose the dictionary") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft_enc_pass").toString
+    val out = Files.createTempDirectory("graft_enc_pass_out").toString
+    (1 to 3000).map { i =>
+      (i.toLong, i * 1.37, s"note number $i", s"tier${i % 4}", (i % 9).toLong,
+        s"first$i", s"secret$i", s"gone$i")
+    }.toDF("id", "balance", "comment", "tier", "bucket", "name", "secret", "dropped")
+      .coalesce(1).write.parquet(s"$in/t.parquet")
+    Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1).write.parquet(s"$in/copied.parquet")
+    val cfg = TableConfig("t", AnonymizationType.Multi(Seq(
+      custom("name", "fake_firstname_transformation"),
+      ColumnTransformation("secret", TransformationType.Replace("x"), false),
+      ColumnTransformation("dropped", TransformationType.Nullify, false))))
+    TablePipeline.runAll(spark, AnonymizationConfig(Seq(cfg)), in, out, Seq("t", "copied"))
+
+    assert(codecs(s"$out/t.parquet") == Set(CompressionCodecName.ZSTD))
+    // the byte copy keeps its input's bytes, and so Spark's default codec
+    assert(codecs(s"$out/copied.parquet") == codecs(s"$in/copied.parquet"))
+    assert(!codecs(s"$out/copied.parquet").contains(CompressionCodecName.ZSTD))
+    val dict = dictionaryPages(s"$out/t.parquet")
+    Seq("id", "balance", "comment").foreach(c =>
+      assert(!dict(c), s"$c: distinct-valued pass-through written with a dictionary"))
+    // repeated pass-through inputs, a wordlist faker, Replace and Nullify
+    // keep Parquet's default
+    Seq("tier", "bucket", "name", "secret").foreach(c =>
+      assert(dict(c), s"$c: expected Parquet's default dictionary"))
+    val built = TablePipeline.build(Bridge.readParquet(spark, s"$in/t.parquet"), cfg)
+    val ref = Files.createTempDirectory("graft_enc_pass_ref").toString + "/t.parquet"
+    built.write.parquet(ref)
+    assertSameRows(spark.read.parquet(s"$out/t.parquet"), spark.read.parquet(ref))
   }
 
   test("no evidence, no option: a non-Parquet input, or one written without dictionaries") {
@@ -146,6 +190,7 @@ class WriterEncodingSpec extends SparkTestBase {
       "--db-name", "d", "--schema-name", "s", "--config-dir", cfgDir,
       "--dms", "--pk", "orders=o_orderkey")), spark)
 
+    assert(codecs(s"$out/orders.parquet") == Set(CompressionCodecName.ZSTD))
     val dict = dictionaryPages(s"$out/orders.parquet")
     assert(!dict("o_orderkey"), "distinct-valued fake written with a dictionary")
     assert(dict("o_custkey"), "fake of a repeated key lost its dictionary")
